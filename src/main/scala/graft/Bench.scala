@@ -93,9 +93,9 @@ object Bench {
     // query growth inside that budget. So the stdout record is
     // TOTAL-ONLY (~100 chars, immune to query-count growth); the
     // per-query map at full precision lives in the bench_full.json
-    // sidecar written above, which the per-round regression diff and
-    // SpotBench workflows read. Error names only (no messages) when
-    // non-empty, capped at 5, so even a mass failure stays in-window.
+    // sidecar written above, which the per-round regression diff reads.
+    // Error names only (no messages) when non-empty, capped at 5, so
+    // even a mass failure stays in-window.
     def ms(v: Double): String = { // locale-safe: Long/Double toString only
       if (v >= 9.95) math.round(v).toString
       else {

@@ -205,6 +205,10 @@ object Components {
     ranks.select(col("__n").as("vertice"), col("__r").as("rank"))
   }
 
+  /** Largest weak frontier [[kCore]] broadcasts into its removal joins:
+    * 2^22 vertex ids ≈ tens of MB. */
+  private val KCoreBroadcastFrontierMax = 4194304L
+
   /** k-core decomposition — the maximal subgraph where every vertex keeps
     * degree ≥ k after all weaker vertices peel away (Seidman 1983).
     * Fourth member of the graph suite: components find WHO connects,
@@ -278,8 +282,9 @@ object Components {
     // side, and total work is O(|E| + Σ frontier) — the textbook peel.
     // Every round still checkpoints the shrunken edge set (lineage) and
     // the final degrees are re-derived from the SURVIVING edges alone,
-    // so results are bit-identical to the recompute form (spec-pinned,
-    // KCoreIncrementalSpec cross-checks random graphs).
+    // so results are bit-identical to the recompute form (ComponentsSpec's
+    // "kCore incremental degree maintenance matches a brute-force peel"
+    // cross-checks a pseudo-random graph).
     // the degree table is EAGERLY localCheckpoint'd (not just persisted)
     // each round: its incremental plan references the previous round's
     // table, so persist alone would chain the logical plans across
@@ -308,11 +313,8 @@ object Components {
       val weakCount = weak.count()
       if (weakCount == 0L) { done = true }
       else {
-        val bcMax = edges.sparkSession.conf
-          .getOption("spark.graft.kcore.broadcastFrontierMax")
-          .map(_.toLong).getOrElse(4194304L) // 2^22 longs ≈ tens of MB
         val hint: DataFrame => DataFrame =
-          if (weakCount <= bcMax) broadcast else identity
+          if (weakCount <= KCoreBroadcastFrontierMax) broadcast else identity
         val weakV = weak.select(col("v"))
         // edges with ≥1 weak endpoint leave the graph; each survivor
         // endpoint of a leaving edge loses one degree

@@ -842,32 +842,46 @@ object Dedup {
         greatest(col("id_a"), col("id_b")).as("id_b"),
         (lit(0): Column).cast(
           org.apache.spark.sql.types.IntegerType).as("hamming"))
-    // the two member joins multiply each representative pair by its
-    // group sizes (×gₐ, then ×g_b — the answer's own volume). The same
-    // AQE-coalescing trap as the tile join above: the rep-pair frame is
-    // sf-invariant-small, so unpinned both expansions ran in one
-    // post-coalesce task at sf10; explicit key-repartitions keep the
-    // output-bound work spread. Gated on the within volume — when
-    // replication is low (Σg² ≈ |memb|, below the pin threshold) the
-    // expansions do not expand and AQE's own coalescing is right.
-    val sessConf = sh.sparkSession.sessionState.conf
-    val pinX = withinVolume >= sessConf
-      .getConfString("spark.graft.pairs.pinWidthMinPairs", "16777216")
-      .toDouble
-    val xparts = sessConf.numShufflePartitions
-    val xpin: (DataFrame, Column) => DataFrame =
-      if (pinX) (df, c) => df.repartition(xparts, c) else (df, _) => df
-    val cross = xpin(repPairs, col("__ra"))
-      .join(memb.select(col("__rep").as("__ra"), col("__id").as("__ma")),
-        "__ra")
-      .transform(df => xpin(df, col("__rb")))
-      .join(memb.select(col("__rep").as("__rb"), col("__id").as("__mb")),
-        "__rb")
-      .select(least(col("__ma"), col("__mb")).as("id_a"),
-        greatest(col("__ma"), col("__mb")).as("id_b"), col("hamming"))
     // disjoint by construction (same group vs different groups), and
     // each side emits every pair exactly once — no final distinct
-    cross.unionByName(within)
+    expandRepPairs(repPairs, memb, withinVolume).unionByName(within)
+  }
+
+  /** Expand representative pairs to member pairs — the shared last step
+    * of every representative collapse ([[simhashTail]], Linkage's class
+    * pairs, TfIdfLink's token-set pairs).
+    *
+    * `repPairs`: (__ra, __rb, payload…) — one row per representative
+    * pair. `memb`: (__rep, __id) — one row per member. Returns
+    * (id_a = least, id_b = greatest, payload…): the two member joins
+    * multiply each representative pair by its group sizes (×gₐ, then
+    * ×g_b — the answer's own volume).
+    *
+    * Representative pairs are sf-invariant-small, so AQE's byte-based
+    * coalescing folded both unpinned expansions into one post-coalesce
+    * task at sf10 (the q27 thread-dump trap). `volume` is the caller's
+    * observed Σ group-size² (the within-group [[tiledPairsStats]] of the
+    * same membership): at or above [[PinWidthMinPairs]] both expansions
+    * are key-repartitioned to the session's shuffle width, which AQE does
+    * not coalesce. Below it replication is low, the expansions do not
+    * expand, and AQE's own coalescing is right — the pin would only add
+    * exchanges.
+    */
+  private[graft] def expandRepPairs(
+      repPairs: DataFrame, memb: DataFrame, volume: Double): DataFrame = {
+    val parts = repPairs.sparkSession.sessionState.conf.numShufflePartitions
+    def pin(df: DataFrame, key: String): DataFrame =
+      if (volume >= PinWidthMinPairs) df.repartition(parts, col(key)) else df
+    val payload =
+      repPairs.columns.toSeq.filterNot(Set("__ra", "__rb")).map(col)
+    pin(repPairs, "__ra")
+      .join(memb.select(col("__rep").as("__ra"), col("__id").as("__ma")),
+        "__ra")
+      .transform(pin(_, "__rb"))
+      .join(memb.select(col("__rep").as("__rb"), col("__id").as("__mb")),
+        "__rb")
+      .select(least(col("__ma"), col("__mb")).as("id_a") +:
+        greatest(col("__ma"), col("__mb")).as("id_b") +: payload: _*)
   }
 
   /** Distinct-text collapse shared by the simhash family (the q183/q227
@@ -905,9 +919,9 @@ object Dedup {
       .join(sigs, Seq("__tid")).drop("__tid")
 
   /** The portable signature stage of [[simhashPairsPortable]]: one row
-    * per member — (__id, __v0..__v3). Exposed for the SpotBench stage-
-    * decomposition probes (NOT persisted here — callers decide). */
-  private[graft] def simhashSignaturesPortable(
+    * per member — (__id, __v0..__v3). NOT persisted here — the caller
+    * decides. */
+  private def simhashSignaturesPortable(
       docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val (base, texts) = distinctTexts(docs, idCol, textCol)
     val m = md5(col("__tok").cast("binary"))
@@ -959,11 +973,32 @@ object Dedup {
     */
   val AdaptiveBlock: Int = 0
 
+  /** Tile-budget factor k of [[adaptiveMaxBlockStats]]: the tile side is
+    * k·√(W/P). */
+  private val TileBudgetFactor = 4.0
+
+  /** Observed pair volume (Σ block-size², 2^24) at and above which the
+    * pair engine pins its output-bound exchanges to the session's shuffle
+    * width — both tile sides in [[tiledPairsStats]] and both member joins
+    * in [[expandRepPairs]]. Below it AQE's input-byte coalescing is right:
+    * the extra full-width exchanges cost +2..3 s on q27/q183 at sf0.1,
+    * while at ~10⁸+ pairs an unpinned plan ran the whole candidate stream
+    * in one task. */
+  private val PinWidthMinPairs = 16777216.0
+
+  /** Singleton pruning broadcasts the multi-row block set: at most 2^22
+    * blocks (≈ 100 MB framed). */
+  private[graft] val MultiBlockBroadcastMax = 4194304L
+
+  /** Singleton pruning must drop at least this fraction of the rows to
+    * pay for its multi-row block broadcast. */
+  private val PruneMinDropFraction = 0.25
+
   /** Pick the tile side from RUNTIME stats — the observed per-block
     * counts (the same aggregation the hot-block filter needs anyway) and
     * the session's shuffle parallelism: total pair work W = Σ n_b² split
     * across P slots gives a per-task pair budget of W/P. The tile side is
-    * k·√(W/P) (k = `spark.graft.tileBudgetFactor`, default 4): a block
+    * k·√(W/P) (k = [[TileBudgetFactor]] = 4): a block
     * only counts as HOT — and pays salting/replication — when its own
     * pair space exceeds k² fair task shares. Salting every block down to
     * exactly one share (k = 1) over-tiles: hash partitioning already
@@ -977,11 +1012,8 @@ object Dedup {
     * corpora on the plain self-join; the cap bounds any single task's
     * pair volume (32768² ≈ 10⁹ comparisons) regardless of W or k.
     *
-    * REFERENCE formula, pinned by DedupSpec: [[tiledPairs]] computes the
-    * same expression inside its plan (one-row Σn² cross-joined onto the
-    * block counts) so sizing the tiles costs no separate action — an
-    * eager pre-action here re-derived the caller's whole `keyed` lineage
-    * once more just to learn the threshold.
+    * REFERENCE formula, pinned by DedupSpec: [[tiledPairsStats]] sizes
+    * its tiles through the same [[adaptiveMaxBlockStats]] action.
     */
   private[graft] def adaptiveMaxBlock(counts: DataFrame, parallelism: Int): Int =
     adaptiveMaxBlockStats(counts, parallelism).effBlock
@@ -1007,13 +1039,33 @@ object Dedup {
       .head()
     if (row.isNullAt(0)) return BlockStats(256, 0.0, 0L, 0L, 0L) // empty input
     val w = row.getDouble(0)
-    val k = counts.sparkSession.sessionState.conf
-      .getConfString("spark.graft.tileBudgetFactor", "4").toDouble
-    val target =
-      math.ceil(k * math.sqrt(w / math.max(parallelism, 1))).toLong
+    val target = math.ceil(
+      TileBudgetFactor * math.sqrt(w / math.max(parallelism, 1))).toLong
     BlockStats(math.max(256L, math.min(target, 32768L)).toInt, w,
       row.getLong(1), row.getLong(2), row.getLong(3))
   }
+
+  /** Singleton-block pruning gate of [[tiledPairsStats]], over the stats
+    * of its one sizing action. Two gates:
+    *   - the multi-row block set must fit a broadcast
+    *     ([[MultiBlockBroadcastMax]] blocks);
+    *   - pruning must PAY: singleton rows must be at least
+    *     [[PruneMinDropFraction]] of all rows. On dense blockings (q227's
+    *     token blocks: nearly every row shares a block) the first cut of
+    *     pruning broadcast a multi-million-row salt table to drop almost
+    *     nothing — measured 4.9 → 11.3 s on q227 at sf0.1 — where the
+    *     hot-only path broadcasts only the tiny hot set.
+    * Fixed-maxBlock stats (all −1, no sizing action) never prune.
+    */
+  private[graft] def pruneSingletons(bs: BlockStats): Boolean =
+    bs.nMulti >= 0L && bs.nMulti <= MultiBlockBroadcastMax &&
+      bs.totalRows > 0L &&
+      (bs.totalRows - bs.multiRows).toDouble >=
+        PruneMinDropFraction * bs.totalRows
+
+  private lazy val fixedBlockWarning: Unit = System.err.println(
+    "[graft] tiledPairs: fixed maxBlock skips the sizing action — " +
+      "pair volume unknown, width-pinning gates disabled for such calls")
 
   /** Skew-bounded within-block pair generation, shared by the exact
     * all-pairs scorers ([[blockedJaccard]], [[embeddingNearDups]]).
@@ -1078,26 +1130,14 @@ object Dedup {
       else adaptiveMaxBlockStats(counts, sessConf.numShufflePartitions)
     val (effBlock, pairVolume) = (bs.effBlock, bs.pairVolume)
     // Width-pinning gate (see the repartition below): only a LARGE
-    // observed pair volume justifies suppressing AQE's coalescing —
-    // at small volume the extra 32-task exchanges cost more than they
-    // save (measured +2..3 s on q27/q183 at sf0.1), at ~10⁸+ pairs an
-    // unpinned plan ran the whole candidate stream in one task.
-    // Threshold parameterized (deploy knob), default 2^24 pairs.
-    val pinWidth = pairVolume >= sessConf
-      .getConfString("spark.graft.pairs.pinWidthMinPairs", "16777216")
-      .toDouble
+    // observed pair volume justifies suppressing AQE's coalescing.
+    val pinWidth = pairVolume >= PinWidthMinPairs
     // An explicit maxBlock runs no sizing action, so the pair volume is
     // UNKNOWN (−1) and every width-pinning gate downstream stays off —
     // exactly the single-task AQE-coalescing trap the gates exist for
     // (ADVICE r15). No production caller passes a fixed maxBlock; warn
-    // loudly if one ever does at scale.
-    if (maxBlock > 0)
-      System.err.println(
-        "[graft] tiledPairs: fixed maxBlock skips the sizing action — " +
-          "pair volume unknown, width-pinning gates disabled for this call")
-    if (sys.env.contains("GRAFT_DEBUG_PINS"))
-      System.err.println(s"[pins] tile w=$pairVolume pin=$pinWidth " +
-        s"rows=${bs.totalRows} multiRows=${bs.multiRows} nMulti=${bs.nMulti}")
+    // (once per JVM) if one ever does.
+    if (maxBlock > 0) fixedBlockWarning
     // SINGLETON-BLOCK PRUNING (round 16, guide §3.2 pre-filter / §2.3
     // shuffle fewer bytes): a block with one row can never emit a pair
     // (the diagonal tile's id_a < id_b guard kills the self-pair), yet
@@ -1107,34 +1147,13 @@ object Dedup {
     // singletons), so the inner join below cuts the candidate-stage
     // shuffle ~25× with an output provably identical. The multi-block
     // set comes from the SAME persisted counts table the sizing action
-    // already aggregates, so learning it is free. TWO gates, both from
-    // that one action:
-    //   - the multi-block set must fit a broadcast
-    //     (`spark.graft.pairs.multiBlockBroadcastMax`, default 2^22
-    //     rows ≈ ~100 MB framed);
-    //   - pruning must PAY: singletons must be ≥ the dropped-fraction
-    //     floor (`spark.graft.pairs.pruneMinDropFraction`, default
-    //     0.25) of the rows. On dense blockings (q227's token blocks:
-    //     nearly every row shares a block) the first cut of this
-    //     change broadcast a multi-million-row salt table to drop
-    //     almost nothing — measured 4.9 → 11.3 s on q227 at sf0.1 —
-    //     where the old path broadcasts only the tiny hot set.
-    // Fixed-maxBlock callers run no sizing action (stats unknown = -1)
-    // and keep the old path.
-    val maxBcBlocks = sessConf
-      .getConfString("spark.graft.pairs.multiBlockBroadcastMax", "4194304")
-      .toLong
-    val minDrop = sessConf
-      .getConfString("spark.graft.pairs.pruneMinDropFraction", "0.25")
-      .toDouble
-    val pruneSingletons = bs.nMulti >= 0L && bs.nMulti <= maxBcBlocks &&
-      bs.totalRows > 0L &&
-      (bs.totalRows - bs.multiRows).toDouble >= minDrop * bs.totalRows
+    // already aggregates, so learning it is free; [[pruneSingletons]]
+    // holds the gates.
     // The salt is a deterministic function of the id so re-runs partition
     // identically. ceil(n/effBlock) is 1 for every sub-threshold block,
     // so the pruning join's carried salt equals the old coalesce(hs, 1).
     val salted =
-      if (pruneSingletons) {
+      if (pruneSingletons(bs)) {
         val active = counts
           .filter(col("__cnt") >= 2L)
           .select(col("__block"),
@@ -1295,7 +1314,7 @@ object Dedup {
     * its centroid plan-literal both grow linearly with the cell count.
     *
     * MEASURED (sf1, 20k×64-d vectors, fit + full-corpus route, warm,
-    * local[32] — SpotBench `ivf_flat_*` / `ivf_hier_*` probes):
+    * local[32], isolated probe runs):
     * 256 cells flat 12.0 s vs hier 19.0 s (flat wins — two Lloyd fits
     * plus the fine broadcast join don't amortize); 1024 cells flat
     * 104.5 s vs hier 25.6 s (×4.1); 4096 cells flat 339.1 s vs hier

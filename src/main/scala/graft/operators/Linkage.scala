@@ -341,31 +341,13 @@ object Linkage {
       if (maxDist <= 1) positionalClassPairs(classes, maxBlock)
       else deletionClassPairs(classes, maxDist, maxBlock)
     // class pairs are sf-invariant-small while each member join
-    // multiplies them by a class's replica count (the answer's own
-    // volume): pin both expansions to the session's shuffle width so
-    // AQE's byte-based coalescing cannot fold the output-bound work
-    // into one task (round 15 — the trap thread-dumped on q27's sf10
-    // run applies to every representative-collapse expansion). Gated
-    // on the zero channel's observed Σ class-size²: with no
-    // replication the expansions do not expand and the pin would only
-    // add exchanges.
-    val sessConf = strsIn.sparkSession.sessionState.conf
-    val pinX = zeroVolume >= sessConf
-      .getConfString("spark.graft.pairs.pinWidthMinPairs", "16777216")
-      .toDouble
-    val xparts = sessConf.numShufflePartitions
-    val xpin: (DataFrame, Column) => DataFrame =
-      if (pinX) (df, c) => df.repartition(xparts, c) else (df, _) => df
-    val one = xpin(classPairs, col("__cka"))
-      .join(members.select(col("__ck").as("__cka"),
-        col("__id").as("__ia")), "__cka")
-      .transform(df => xpin(df, col("__ckb")))
-      .join(members.select(col("__ck").as("__ckb"),
-        col("__id").as("__ib")), "__ckb")
-      .select(
-        least(col("__ia"), col("__ib")).as("id_a"),
-        greatest(col("__ia"), col("__ib")).as("id_b"),
-        col("dist"))
+    // multiplies them by a class's replica count; the zero channel's
+    // observed Σ class-size² gates the expansion's width pins
+    val one = graft.llm.Dedup.expandRepPairs(
+      classPairs.select(col("__cka").as("__ra"), col("__ckb").as("__rb"),
+        col("dist")),
+      members.select(col("__ck").as("__rep"), col("__id")),
+      zeroVolume)
     zero.unionByName(one)
   }
 
@@ -426,6 +408,10 @@ object Linkage {
     subPairs.unionByName(indelPairs).withColumn("dist", lit(1L))
   }
 
+  /** Largest class table [[deletionClassPairs]] broadcasts for its two
+    * string-recovery probes: 2^25 rows ≈ low-GB framed. */
+  private val RecoveryBroadcastMaxClasses = 33554432L
+
   /** maxDist >= 2 cross-class channel: position-less <=d-deletion
     * neighborhoods over the DISTINCT-class table — d rounds of
     * explode(self U one-char deletions), distinct per class key, block
@@ -469,10 +455,8 @@ object Linkage {
     // the class table is sf-invariant under replication (distinct
     // strings only) — broadcast both string-recovery probes so the
     // candidate stream never shuffles for them (ADVICE r14; same
-    // rationale as the Fellegi–Sunter attribute probes). Conf-gated
-    // (default on) so the trade is measurable per scale: at sf0.1 the
-    // candidate stream is small and AQE's own choice can win, at sf10
-    // the stream-side shuffle is the disk-filling term. SIZE-GUARDED
+    // rationale as the Fellegi–Sunter attribute probes): at sf10 the
+    // stream-side shuffle is the disk-filling term. SIZE-GUARDED
     // (round 16, VERDICT item 4): "distinct strings" is only small
     // under replication — a mostly-unique corpus has distinct ≈ corpus,
     // and two unconditional copies of it would hit Spark's 8 GB /
@@ -480,13 +464,8 @@ object Linkage {
     // RegistryLinkGraph q186 attrs ceiling, made a runtime gate here).
     // The count is one aggregation over the already-persisted class
     // cache the recovery probes materialize anyway.
-    val maxBcClasses = classes.sparkSession.conf
-      .getOption("spark.graft.linkage.broadcastRecoveryMaxClasses")
-      .map(_.toLong).getOrElse(33554432L) // 2^25 rows ≈ low-GB framed
     val hint: DataFrame => DataFrame =
-      if (classes.sparkSession.conf
-          .getOption("spark.graft.linkage.broadcastRecovery")
-          .forall(_.toBoolean) && classes.count() <= maxBcClasses) broadcast
+      if (classes.count() <= RecoveryBroadcastMaxClasses) broadcast
       else identity
     cand
       .join(hint(classes.select(col("__ck").as("__cka"),

@@ -106,47 +106,22 @@ object TfIdfLink {
       .filter(col("cosseno") >= threshold)
       .select(col("__ra"), col("__rb"), col("tokens_comuns"),
         col("cosseno"))
-    // representative pairs are density-small while the member joins
-    // expand them by replica counts — pin both expansions to the
-    // session shuffle width so AQE's byte-based coalescing cannot fold
-    // the output-bound work into one task (round 15, the q27 sf10
-    // thread-dump trap; same fix as Dedup.simhashTail). Gate: the
-    // observed Σ set-group-size² over the persisted membership (one
-    // combinable aggregation on an (id, rep) frame — the replication
-    // signal; ≈ |docs| on an unreplicated corpus, quadratic under
-    // verbatim replicas).
-    val sessConf = df.sparkSession.sessionState.conf
-    val gsqRow = memb.groupBy("__rep").agg(count(lit(1L)).as("__g"))
-      .agg(sum(col("__g").cast("double") * col("__g").cast("double"))
-        .as("__w")).head()
-    val pinX = !gsqRow.isNullAt(0) && gsqRow.getDouble(0) >= sessConf
-      .getConfString("spark.graft.pairs.pinWidthMinPairs", "16777216")
-      .toDouble
-    val xparts = sessConf.numShufflePartitions
-    val xpin: (DataFrame, org.apache.spark.sql.Column) => DataFrame =
-      if (pinX) (d, c) => d.repartition(xparts, c) else (d, _) => d
-    val cross = xpin(repPairs, col("__ra"))
-      .join(memb.select(col("__rep").as("__ra"), col("__id").as("__ma")),
-        "__ra")
-      .transform(d => xpin(d, col("__rb")))
-      .join(memb.select(col("__rep").as("__rb"), col("__id").as("__mb")),
-        "__rb")
-      .select(least(col("__ma"), col("__mb")).as("id_a"),
-        greatest(col("__ma"), col("__mb")).as("id_b"),
-        col("tokens_comuns"), col("cosseno"))
     val selfScore = norms
       .withColumn("__cos",
         col("__ss").cast("double") / (col("__nrm") * col("__nrm")))
       .filter(col("__cos") >= threshold)
       .select(col("__id").as("__rep2"), col("__ntok"), col("__cos"))
-    val within = Dedup.tiledPairs(
+    // the within-set tiling stats (Σ set-group-size² over __rep blocks)
+    // are the replication signal gating the expansion's width pins
+    val (withinRaw, withinVolume) = Dedup.tiledPairsStats(
         memb.select(col("__id"), col("__rep"),
           col("__rep").as("__block")),
         Seq("__rep"), maxBlock, cache = false)
+    val within = withinRaw
       .join(selfScore, col("__rep_a") === col("__rep2"))
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"),
         col("__ntok").as("tokens_comuns"), col("__cos").as("cosseno"))
-    cross.unionByName(within)
+    Dedup.expandRepPairs(repPairs, memb, withinVolume).unionByName(within)
   }
 }

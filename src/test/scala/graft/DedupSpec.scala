@@ -756,4 +756,50 @@ class DedupSpec extends SparkSpec {
       s"prefix join ${got.size} pairs vs brute ${brute.size}")
     assert(brute.nonEmpty, "planted variants must qualify")
   }
+
+  test("singleton pruning gate: sparse prunes; a wide multi-block set, a " +
+      "low drop fraction or fixed-maxBlock stats keep the hot-only path") {
+    import Dedup.{BlockStats, pruneSingletons}
+    // (effBlock, pairVolume, nMulti, totalRows, multiRows)
+    assert(pruneSingletons(BlockStats(256, 1e3, 10L, 1000L, 40L)),
+      "96% singleton rows must prune")
+    assert(!pruneSingletons(BlockStats(256, 1e9,
+        Dedup.MultiBlockBroadcastMax + 1, 1L << 26, 1L << 24)),
+      "a multi-block set past the broadcast cap must not prune")
+    assert(!pruneSingletons(BlockStats(256, 1e3, 10L, 1000L, 800L)),
+      "dropping 20% < 25% of the rows does not pay")
+    assert(pruneSingletons(BlockStats(256, 1e3, 10L, 1000L, 750L)),
+      "dropping exactly 25% of the rows pays")
+    assert(!pruneSingletons(BlockStats(8, -1.0, -1L, -1L, -1L)),
+      "fixed-maxBlock stats are unknown and must not prune")
+  }
+
+  test("expandRepPairs: pinned and unpinned expansions emit the same " +
+      "member pairs; only the pinned plan repartitions") {
+    // groups: rep 1 = {1, 2, 3}, rep 10 = {10, 11}, rep 20 = {20}
+    val memb = Seq(1L -> 1L, 1L -> 2L, 1L -> 3L, 10L -> 10L, 10L -> 11L,
+      20L -> 20L).toDF("__rep", "__id")
+    val repPairs = Seq((1L, 10L, "p"), (10L, 20L, "q"))
+      .toDF("__ra", "__rb", "tag")
+    def run(volume: Double) = {
+      val df = Dedup.expandRepPairs(repPairs, memb, volume)
+      val plan = planString(df)
+      (df.as[(Long, Long, String)].collect().sorted.toSeq, plan)
+    }
+    val (plain, plainPlan) = run(0.0)
+    val (pinned, pinnedPlan) = run(Double.MaxValue)
+    val expected = (for (a <- Seq(1L, 2L, 3L); b <- Seq(10L, 11L))
+        yield (a, b, "p")) ++ Seq((10L, 20L, "q"), (11L, 20L, "q"))
+    assert(plain == expected.sorted)
+    assert(pinned == plain, "the width pin must not change the rows")
+    // a user-specified partition count: the exchange AQE never coalesces
+    val parts = spark.sessionState.conf.numShufflePartitions
+    def pins(plan: String) = Seq("__ra", "__rb").map(k =>
+      (s"Exchange hashpartitioning\\($k#\\d+L, $parts\\), " +
+        "REPARTITION_BY_NUM").r.findFirstIn(plan).isDefined)
+    assert(pins(plainPlan) == Seq(false, false),
+      s"below the threshold the expansion must not repartition:\n$plainPlan")
+    assert(pins(pinnedPlan) == Seq(true, true),
+      s"the pinned expansion repartitions on __ra and on __rb:\n$pinnedPlan")
+  }
 }

@@ -319,6 +319,27 @@ class NewOpsR12Spec extends SparkSpec {
     // this operator exists for
     val lev = names.as[(Long, String)].collect().toMap
     assert(levenshteinDist(lev(1L), lev(2L)) >= 8)
+    // replicated token sets: two distinct sets of two members each pair
+    // at the representative level and expand ×2×2 through the members.
+    // N = 10, df(ana|maria|lima) = 4 → w = 2.5, df(souza) = 2 → w = 5:
+    // cos = 3·2.5² / √(3·2.5² · (3·2.5² + 5²)) = √(18.75 / 43.75)
+    val reps = (Seq(
+      (10L, "ana maria lima"), (11L, "lima ana maria"),
+      (12L, "ana maria lima souza"), (13L, "souza lima maria ana")) ++
+      Seq("pedro costa", "jose nunes", "rui barbosa", "caio prado",
+        "davi rocha", "enzo teles").zipWithIndex
+        .map { case (n, i) => (20L + i, n) })
+      .toDF("id", "nome")
+    val rep = TfIdfLink.tfidfNamePairs(reps, "id", "nome", 0.6)
+      .select("id_a", "id_b", "tokens_comuns", "cosseno")
+      .as[(Long, Long, Long, Double)].collect()
+      .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
+    val cross = for (a <- Seq(10L, 11L); b <- Seq(12L, 13L)) yield (a, b)
+    assert(rep.keySet == (cross :+ (10L, 11L) :+ (12L, 13L)).toSet,
+      s"every cross-set member pair plus the two same-set pairs: $rep")
+    assert(cross.forall { p =>
+        rep(p)._1 == 3L && math.abs(rep(p)._2 - math.sqrt(18.75 / 43.75)) < 1e-12
+      }, s"cross-set pairs share the representative score: $rep")
   }
 
   private def levenshteinDist(a: String, b: String): Int = {

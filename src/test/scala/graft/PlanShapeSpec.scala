@@ -126,21 +126,17 @@ class PlanShapeSpec extends SparkSpec {
       s"salt lookup degenerated to a shuffle join:\n$plan")
   }
 
-  test("tiledPairs falls back to the hot-only LeftOuter broadcast past " +
-      "the multi-block broadcast gate") {
-    val prev = spark.conf.getOption("spark.graft.pairs.multiBlockBroadcastMax")
-    try {
-      spark.conf.set("spark.graft.pairs.multiBlockBroadcastMax", "0")
-      val plan = planString(SparkEntry.queries("q27_simhash")(spark, sfDir))
-      val outer = "(?s)BroadcastHashJoin.*LeftOuter.*BuildRight".r
-      assert(outer.findFirstIn(plan).isDefined,
-        s"gated-off path must keep the hot-block LeftOuter broadcast:\n$plan")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.pairs.multiBlockBroadcastMax", v)
-        case None => spark.conf.unset("spark.graft.pairs.multiBlockBroadcastMax")
-      }
-    }
+  test("tiledPairs keeps the hot-only LeftOuter broadcast when pruning " +
+      "cannot pay") {
+    // 8 blocks of 8 rows: no singleton block, so singleton pruning would
+    // drop 0% of the rows (< the 25% floor) and the gate falls back
+    val dense = spark.range(0, 64)
+      .select(col("id").as("__id"), (col("id") % 8).as("__block"))
+    val plan = planString(graft.llm.Dedup.tiledPairs(
+      dense, Seq.empty, graft.llm.Dedup.AdaptiveBlock))
+    val outer = "(?s)BroadcastHashJoin.*LeftOuter.*BuildRight".r
+    assert(outer.findFirstIn(plan).isDefined,
+      s"gated-off path must keep the hot-block LeftOuter broadcast:\n$plan")
   }
 
   test("co-bucketed tables join without any shuffle") {
